@@ -11,6 +11,8 @@ echo "== sbt compile =="
 sbt -batch compile
 echo "== sbt test =="
 sbt -batch test
+echo "== perfbench arithmetic tests =="
+PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench -p 'test_*.py'
 echo "== Verify + DuckDB oracle ($SF) =="
 sbt -batch "runMain graft.Verify $SF $OUT" 2>/dev/null | tail -1
 python3 scripts/check.py "$SF" "$OUT"

@@ -6,7 +6,7 @@
 # UTC, UI off, SPARK_DRIVER_MEM). Compile first (`sbt -batch compile`),
 # and do NOT recompile while a probe JVM is mid-run — lazy classloading
 # reads the class files being rewritten.
-#   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 scripts/probe.sh graft.tools.AnnScale
+#   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 scripts/probe.sh graft.tools.PlanAudit
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLS="$1"; shift || true

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times the headline queries over
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -14,13 +12,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.core.SessionTuning.local(cpus)
       .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -60,7 +53,7 @@ object Bench {
     // load1 ≈ 1 with /proc/stat steal ticking 1-3% even at idle). Sample
     // the steal/total jiffy counters around each iteration so the
     // artifact carries the multiplier's OTHER channel too. The sampler
-    // is shared with the probe harness (HostLoad, r13) and sums only
+    // is shared with perfbench (HostLoad, r13) and sums only
     // fields user..steal — the raw line sum double-counted guest jiffies
     // and deflated steal% (r12 ADVICE).
     def cpuJiffies(): (Long, Long) = graft.tools.HostLoad.cpuJiffies()

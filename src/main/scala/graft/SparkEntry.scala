@@ -15,7 +15,6 @@ object SparkEntry {
   /** All declared capabilities, one QueryDef per operator (SURVEY.md §2). */
   def allDefs: Seq[QueryDef] =
     operators.Relational.defs ++ operators.RelationalExt.defs ++
-      operators.Relational2.defs ++
       operators.EventOps.defs ++
       operators.TextAnalysis.defs ++ operators.Dedup.defs ++
       operators.Curation.defs ++ operators.Compliance.defs ++

@@ -2,13 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-wide session tuning applied by every driver-contract main
-  * (Bench/Verify), the shared test session, and every graft.tools probe
-  * main (ALL session-building mains wrap their builder in [[tuned]] as of
-  * r14 — the r13 gap where *Scale probes ran a different shuffle writer
-  * than the bench they diagnose is closed) — ONE place for static confs
-  * the r13 profiling justified, so a probe measures the same engine the
-  * bench reports.
+/** Engine-wide session construction: ONE place for the static confs the
+  * r13 profiling justified, so every session measures the same engine.
+  * The driver-contract mains (`graft.Bench`, `graft.Verify`), the plan
+  * audit (`graft.tools.PlanAudit`) and the shared test session build
+  * through [[local]]; `perfbench.BenchMain` wraps its own builder in
+  * [[tuned]].
   *
   * `spark.shuffle.sort.bypassMergeThreshold = 1` (r13, guide §2.2): with
   * R ≤ the default threshold (200), Spark's bypass shuffle writer opens
@@ -24,10 +23,19 @@ import org.apache.spark.sql.SparkSession
   * on the large exchanges (q104/q46 unchanged within sd). Scale-honest:
   * production R exceeds 200 on any real cluster, where this conf is
   * inert — it only removes the small-R file-count cliff the local bench
-  * (R = SPARK_GRAFT_CPUS) sits on. Env override for A/B probes.
+  * (R = SPARK_GRAFT_CPUS) sits on.
   */
 object SessionTuning {
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
+
+  /** A tuned `local[cpus]` builder with one shuffle partition per core,
+    * UTC session time and the UI off; callers add only what is their own
+    * (app name, warehouse dir) before `getOrCreate()`. */
+  def local(cpus: String): SparkSession.Builder =
+    tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
 }

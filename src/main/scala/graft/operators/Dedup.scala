@@ -598,7 +598,7 @@ object Dedup {
 
   /** Histogram of (band, sig) bucket occupancies over the distinct-text
     * corpus — the sizing probe behind the q224b capped gate's `maxBucket`
-    * (see [[graft.tools.BucketOccupancy]]): identity collapse first, so
+    * (see `graft.tools.BucketOccupancy`): identity collapse first, so
     * occupancy counts REPS exactly as [[capBuckets]] sees them. */
   def bucketOccupancyHistogram(docs: DataFrame): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism

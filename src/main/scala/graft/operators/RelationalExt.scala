@@ -1,10 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.core.{QueryDef, Tables}
 
 /** Harness-extension relational operators beyond the reference surface:
-  * exact percentiles, cube grouping sets, and sketch-based distinct counts.
+  * exact percentiles, cube grouping sets, sketch-based distinct counts,
+  * outer joins, string/null functions, RANGE frames, the salted skew join
+  * and the key-free banded range join.
   */
 object RelationalExt {
 
@@ -141,7 +144,6 @@ object RelationalExt {
     * WindowGroupLimit-pruned on the part key. */
   def alsoBought(lineitem: org.apache.spark.sql.DataFrame,
       minSupport: Long = 3, topK: Int = 3): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.core.Lineage.CutOps
     val r = basketRules(lineitem, minSupport).cutLineage()
     val directed = r.select(col("part_a").as("part"), col("part_b").as("rec"),
@@ -529,6 +531,34 @@ object RelationalExt {
             lit(0.0)) * 1e6 + lit(0.5)) / 1e6).as("slope"))
       .orderBy(col("slope").desc, col("l_suppkey"))
       .limit(topK)
+  }
+
+  /** KEY-FREE interval join — points-in-intervals with NO shared equi key,
+    * the shape Catalyst can only plan as a broadcast nested loop (or a
+    * cartesian product once both sides are big). Range banding restores a
+    * hash join: every interval explodes to the buckets it overlaps
+    * (⌈len/width⌉+1 — cheap-inline generator input, the fast explode
+    * shape), every point lands in EXACTLY one bucket, the join is a plain
+    * bucket equi-join, and the exact range predicate trims the band
+    * edges. A qualifying pair meets in exactly one bucket (the point's),
+    * so the output needs no dedup; IEEE division is monotone, so a point
+    * inside [lo, hi] can never band outside [⌊lo/w⌋, ⌊hi/w⌋] — the
+    * banding is lossless by monotonicity, not by tolerance. Cost:
+    * shuffle ∝ intervals·(len/width) + points; pick width ≈ the typical
+    * interval length (the standard binned-range-join trade; q68 covers
+    * the easier case where an equi key already bounds the pairing).
+    * `intervals` needs (lo, hi) columns, `points` a (v) column; all other
+    * columns pass through. */
+  def bandedRangeJoin(intervals: org.apache.spark.sql.DataFrame,
+      points: org.apache.spark.sql.DataFrame, width: Double): org.apache.spark.sql.DataFrame = {
+    require(width > 0, s"band width must be positive: $width")
+    val ib = intervals.withColumn("bucket",
+      explode(sequence(floor(col("lo") / width).cast("long"),
+        floor(col("hi") / width).cast("long"))))
+    val pb = points.withColumn("bucket", floor(col("v") / width).cast("long"))
+    ib.join(pb, Seq("bucket"))
+      .filter(col("v") >= col("lo") && col("v") <= col("hi"))
+      .drop("bucket")
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -1141,5 +1171,141 @@ object RelationalExt {
              |    * 1e6 + 0.5) / 1e6 AS slope
              |FROM mo ORDER BY slope DESC, l_suppkey
              |LIMIT 25""".stripMargin)),
+
+    // ---- q135: key-free banded range join ----------------------------------
+    // Customers within ±50 of each supplier's account balance — no equi
+    // key anywhere; the oracle is the plain theta join (small at gate SF),
+    // while the Spark plan is the banded hash join (PlanSpec pins the
+    // absence of nested-loop/cartesian operators).
+    QueryDef(
+      "q135_banded_range_join",
+      (s, d) => {
+        import s.implicits._
+        val sup = Tables.supplier(s, d).select($"s_suppkey",
+          ($"s_acctbal" - 50).as("lo"), ($"s_acctbal" + 50).as("hi"))
+        val cust = Tables.customer(s, d).select($"c_custkey", $"c_acctbal".as("v"))
+        bandedRangeJoin(sup, cust, width = 100.0)
+          .select($"s_suppkey", $"c_custkey", $"v".as("c_acctbal"))
+          .orderBy($"s_suppkey", $"c_custkey")
+      },
+      Some("""SELECT s.s_suppkey, c.c_custkey, c.c_acctbal
+             |FROM supplier s JOIN customer c
+             |  ON c.c_acctbal >= s.s_acctbal - 50
+             | AND c.c_acctbal <= s.s_acctbal + 50
+             |ORDER BY s_suppkey, c_custkey""".stripMargin)),
+
+    // ---- q28: outer joins with null-aware aggregation ----------------------
+    // Left join keeps order-less customers; coalesce folds the null side.
+    QueryDef(
+      "q28_outer_joins",
+      (s, d) => {
+        import s.implicits._
+        val custOrders = Tables.customer(s, d)
+          .join(Tables.orders(s, d).filter($"o_totalprice" > 150000),
+            $"c_custkey" === $"o_custkey", "left")
+          .groupBy($"c_custkey")
+          .agg(count($"o_orderkey").as("n_big_orders"),
+            round(coalesce(sum($"o_totalprice"), lit(0.0)), 2).as("big_total"))
+        custOrders
+          .filter($"c_custkey" <= 200)
+          .orderBy($"c_custkey")
+      },
+      Some("""SELECT c_custkey, count(o_orderkey) AS n_big_orders,
+             |  round(coalesce(sum(o_totalprice), 0.0), 2) AS big_total
+             |FROM customer
+             |LEFT JOIN orders ON c_custkey = o_custkey AND o_totalprice > 150000
+             |GROUP BY c_custkey
+             |HAVING c_custkey <= 200
+             |ORDER BY c_custkey""".stripMargin)),
+
+    // ---- q29: string + null scalar function zoo -----------------------------
+    QueryDef(
+      "q29_string_null_funcs",
+      (s, d) => {
+        import s.implicits._
+        Tables.documents(s, d)
+          .filter($"doc_id" < 200)
+          .select(
+            $"doc_id",
+            regexp_extract($"source", "src(\\d+)", 1).cast("int").as("src_num"),
+            translate($"lang", "aeiou", "AEIOU").as("lang_caps_vowels"),
+            lpad($"lang", 5, "_").as("lang_pad"),
+            reverse($"lang").as("lang_rev"),
+            trim(lit("  x  ")).as("trimmed"),
+            nullif($"lang", lit("en")).as("lang_or_null"),
+            coalesce(nullif($"lang", lit("en")), lit("default")).as("lang_coalesced"),
+            substring($"text", 1, 10).as("text_head"),
+            instr($"text", "the").as("the_pos"))
+          .orderBy($"doc_id")
+      },
+      Some("""SELECT doc_id,
+             |  CAST(regexp_extract(source, 'src(\d+)', 1) AS INT) AS src_num,
+             |  translate(lang, 'aeiou', 'AEIOU') AS lang_caps_vowels,
+             |  lpad(lang, 5, '_') AS lang_pad,
+             |  reverse(lang) AS lang_rev,
+             |  trim('  x  ') AS trimmed,
+             |  nullif(lang, 'en') AS lang_or_null,
+             |  coalesce(nullif(lang, 'en'), 'default') AS lang_coalesced,
+             |  substr(text, 1, 10) AS text_head,
+             |  CAST(instr(text, 'the') AS INT) AS the_pos
+             |FROM documents WHERE doc_id < 200
+             |ORDER BY doc_id""".stripMargin)),
+
+    // ---- q65: RANGE frames + ntile + first/nth_value ------------------------
+    // Sliding time-window aggregation without a join: events per user in
+    // the preceding 10 minutes via a RANGE frame over integer epoch
+    // seconds (exact arithmetic on both engines).
+    QueryDef(
+      "q65_range_frame",
+      (s, d) => {
+        import s.implicits._
+        val w = Window.partitionBy($"user_id").orderBy($"t")
+        val range10m = w.rangeBetween(-600L, Window.currentRow)
+        Tables.events(s, d)
+          .filter($"user_id" < 20)
+          .select($"user_id", $"event_id", unix_timestamp($"ts").as("t"))
+          .withColumn("n_last_10min", count(lit(1)).over(range10m))
+          .withColumn("quartile", ntile(4).over(Window.partitionBy($"user_id").orderBy($"t", $"event_id")))
+          .withColumn("first_t", first($"t").over(
+            Window.partitionBy($"user_id").orderBy($"t", $"event_id")
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select($"user_id", $"event_id", $"n_last_10min", $"quartile",
+            ($"t" - $"first_t").as("secs_since_first"))
+          .orderBy($"user_id", $"t", $"event_id")
+      },
+      Some("""WITH e AS (
+             |  SELECT user_id, event_id,
+             |         CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS t
+             |  FROM events WHERE user_id < 20)
+             |SELECT user_id, event_id,
+             |  count(*) OVER (PARTITION BY user_id ORDER BY t
+             |                 RANGE BETWEEN 600 PRECEDING AND CURRENT ROW) AS n_last_10min,
+             |  ntile(4) OVER (PARTITION BY user_id ORDER BY t, event_id) AS quartile,
+             |  t - first_value(t) OVER (PARTITION BY user_id ORDER BY t, event_id
+             |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS secs_since_first
+             |FROM e ORDER BY user_id, t, event_id""".stripMargin)),
+
+    // ---- q98: salted skew join ---------------------------------------------
+    // Oracle = the PLAIN equi-join: proves the salt spreading + small-side
+    // replication is result-invariant (every key match meets in exactly one
+    // salt bucket). Plan shape (no single reducer owns a hot key) is pinned
+    // by SkewSpec; this row pins the semantics.
+    QueryDef(
+      "q98_skew_salted_join",
+      (s, d) => {
+        import s.implicits._
+        graft.core.Skew.saltedJoin(
+            Tables.lineitem(s, d).select($"l_partkey", $"l_quantity"),
+            Tables.part(s, d).select($"p_partkey", $"p_brand"),
+            $"l_partkey", $"p_partkey", buckets = 8)
+          .groupBy($"p_brand")
+          .agg(count(lit(1)).as("n_items"),
+            round(sum($"l_quantity"), 2).as("sum_qty"))
+          .orderBy($"p_brand")
+      },
+      Some("""SELECT p_brand, count(*) AS n_items,
+             |  round(sum(l_quantity), 2) AS sum_qty
+             |FROM lineitem JOIN part ON l_partkey = p_partkey
+             |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
   )
 }

@@ -1,12 +1,11 @@
 package graft.tools
 
-/** Shared host-contention instrument for the bench and every scale probe
-  * (r13 directive 2: single-run probe rungs inherited the host ambiguity
-  * the bench escaped in r12 — the ~1.6–2× hypervisor throttle that
-  * contaminated every absolute number that round was only diagnosable
-  * because `Bench` sampled steal per iteration; probes printed stage
-  * censuses but neither contention channel, so their rungs could not be
-  * adjudicated host-vs-code after the fact).
+/** Shared host-contention instrument for `graft.Bench` and
+  * `perfbench.BenchMain`: every timed number carries the contention it ran
+  * under, so a slow run can be adjudicated host-vs-code after the fact
+  * (r12: the ~1.6–2× hypervisor throttle that contaminated every absolute
+  * number that round was only diagnosable because `Bench` sampled steal
+  * per iteration).
   *
   * Two channels, because they see DIFFERENT contention:
   *  - `load1` — THIS guest's 1-min runnable queue: foreign processes in
@@ -38,28 +37,4 @@ object HostLoad {
         .trim.split("\\s+").drop(1).take(8).map(_.toLong)
       (if (f.length > 7) f(7) else 0L, f.sum)
     } catch { case _: Throwable => (0L, 1L) }
-
-  /** One timed sample: (result, elapsed sec, load1 at start, steal% of
-    * total jiffies across the body's wall window). */
-  def measured[T](body: => T): (T, Double, Double, Double) = {
-    val pre = load1
-    val j0 = cpuJiffies()
-    val t0 = System.nanoTime()
-    val r = body
-    val secs = (System.nanoTime() - t0) / 1e9
-    val j1 = cpuJiffies()
-    val steal = 100.0 * (j1._1 - j0._1).max(0L) / (j1._2 - j0._2).max(1L)
-    (r, secs, pre, steal)
-  }
-
-  /** The per-rung suffix every probe row carries in SCALING §R13+. */
-  def fmt(secs: Double, l1: Double, stealPct: Double): String =
-    f"$secs%.1f s (load1 $l1%.2f, steal $stealPct%.2f%%)"
-
-  /** Convenience: time the body and print "label: …s (load1 …, steal …)". */
-  def timed[T](label: String)(body: => T): T = {
-    val (r, secs, l1, st) = measured(body)
-    println(s"$label: ${fmt(secs, l1, st)}")
-    r
-  }
 }

@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
-/** Dev tool: dump the formatted physical plan of selected gate queries
-  * (args = query names; default = the newest additions) for shuffle /
-  * pushdown / codegen review. SPARK_GRAFT_EXEC=1 additionally EXECUTES
-  * each query and prints the final adaptive plan — under AQE, exchange
-  * reuse (ReusedExchange/stage cache) only appears at runtime, so a
-  * static dump over-counts scans for shared-lineage plans. */
+/** Dev tool: print the formatted physical plan of selected queries (args =
+  * query names; default = every headline QueryDef, the bench set) for
+  * shuffle / pushdown / codegen review. SPARK_GRAFT_EXEC=1 additionally
+  * EXECUTES each query and prints the final adaptive plan — under AQE,
+  * exchange reuse (ReusedExchange/stage cache) only appears at runtime, so
+  * a static dump over-counts scans for shared-lineage plans.
+  *
+  * Usage: scripts/probe.sh graft.tools.PlanAudit [names...] */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -16,23 +17,16 @@ object PlanAudit {
     // default 4 for quick shape reads; set SPARK_GRAFT_CPUS=32 to audit
     // the BENCH session shape (AQE decisions are partition-count sensitive)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("q76_pii_redact", "q77_decontaminate", "q78_mixture_resample",
-        "q79_repetition_audit", "q80_global_shuffle", "q81_vocab_census",
-        "q82_upsert_merge", "q83_zorder_stats", "q84_chunk_windows")
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      // allDefs, not queries: headline-only twins (gate = false) are
-      // bench rows too and need plan audits (r13)
-      val df = SparkEntry.allDefs.find(_.name == n)
-        .getOrElse(sys.error(s"no such query: $n")).build(spark, sfDir)
+    // allDefs, not queries: headline-only twins (gate = false) are
+    // bench rows too and need plan audits (r13)
+    val defs = if (args.isEmpty) SparkEntry.allDefs.filter(_.headline)
+      else args.toSeq.map(n => SparkEntry.allDefs.find(_.name == n)
+        .getOrElse(sys.error(s"no such query: $n")))
+    defs.foreach { d =>
+      println(s"\n========== ${d.name} ==========")
+      val df = d.build(spark, sfDir)
       if (exec) {
         // collect() drives df's OWN QueryExecution so the printed plan is
         // the FINALIZED adaptive one (a noop write would execute a copy)

@@ -15,4 +15,11 @@ class ExtensionsSpec extends SparkSpec {
     val r = spark.sql("SELECT delta_r(1.0, 3.14, 1.0, -3.14) AS dr").head().getDouble(0)
     assert(r < 0.01 && r > 0)
   }
+
+  test("shared session carries the SessionTuning contract the bench and gate rely on") {
+    val conf = spark.conf
+    assert(conf.get("spark.shuffle.sort.bypassMergeThreshold") == "1")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+  }
 }

@@ -5,15 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (JVM-wide singleton). */
 object TestSpark {
-  lazy val spark: SparkSession = graft.core.SessionTuning.tuned(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString))
+  lazy val spark: SparkSession = graft.core.SessionTuning.local("4")
+    .appName("graft-test")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 }
